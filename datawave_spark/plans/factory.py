@@ -146,7 +146,12 @@ class QueryLogicFactory:
 
     def create(self, logic_name: str, qp: QueryParameters) -> RunningQuery:
         """The create path: validate → audit → resolve logic → plan →
-        cap → RunningQuery (QueryExecutorBean.createQuery:664)."""
+        cap → RunningQuery (QueryExecutorBean.createQuery:664).
+
+        ``qp.auths`` (comma-separated) filters the events table through
+        ``visibility.filter_by_auths`` when that table has a
+        ``visibility`` column.  An empty ``auths`` applies no filter:
+        the table is taken as already visibility-filtered, or unlabeled."""
         qp.validate()
         if logic_name not in self._logics:
             raise KeyError(f"unknown query logic {logic_name!r}; "
@@ -160,6 +165,15 @@ class QueryLogicFactory:
                             pagesize=qp.pagesize)
 
     # ----------------------------------------------------- built-ins
+
+    def _events(self, qp: QueryParameters) -> DataFrame:
+        """The events table as the caller's auths see it."""
+        events = self.tables["events"]
+        if qp.auths and "visibility" in events.columns:
+            from datawave_spark.visibility import filter_by_auths
+            events = filter_by_auths(
+                events, [a.strip() for a in qp.auths.split(",")])
+        return events
 
     def _dated(self, df: DataFrame, qp: QueryParameters) -> DataFrame:
         """begin/end date-range prune on the shard column — partition
@@ -176,7 +190,7 @@ class QueryLogicFactory:
         return QueryPlanner(df, **self.planner_kwargs)
 
     def _event_query(self, qp: QueryParameters) -> DataFrame:
-        src = self._dated(self.tables["events"], qp)
+        src = self._dated(self._events(qp), qp)
         res = self._planner(src).plan(
             qp.query, syntax=qp.syntax,
             user_dns=list(qp.user_dns) or None)
@@ -194,7 +208,7 @@ class QueryLogicFactory:
 
     def _discovery_query(self, qp: QueryParameters) -> DataFrame:
         from datawave_spark.operators.discovery import discovery
-        src = self._dated(self.tables["events"], qp)
+        src = self._dated(self._events(qp), qp)
         return discovery(src, self._need_discovery_fields(), self.date_col)
 
     def _field_index_count(self, qp: QueryParameters) -> DataFrame:
@@ -212,7 +226,7 @@ class QueryLogicFactory:
         field, _, value = qp.query.partition(":")
         if not value:
             raise ValueError("LookupUUID query must be FIELD:value")
-        return lookup_uuid(self.tables["events"], field.lower(), value)
+        return lookup_uuid(self._events(qp), field.lower(), value)
 
     def _edge_event_query(self, qp: QueryParameters) -> DataFrame:
         from datawave_spark.edges import edge_events, edge_query
@@ -220,7 +234,7 @@ class QueryLogicFactory:
             raise ValueError("EdgeEventQuery needs edge_source_field/"
                              "edge_sink_field factory config")
         sel = edge_query(self.tables["edges"], qp.query)
-        return edge_events(sel, self._dated(self.tables["events"], qp),
+        return edge_events(sel, self._dated(self._events(qp), qp),
                            self.edge_source_field, self.edge_sink_field)
 
     def _content_query(self, qp: QueryParameters) -> DataFrame:
@@ -235,7 +249,7 @@ class QueryLogicFactory:
         return fetch_content(tbl, self.content_id, ids, self.content_col)
 
     def _uid_frame(self, qp: QueryParameters) -> DataFrame:
-        df = self._dated(self.tables["events"], qp)
+        df = self._dated(self._events(qp), qp)
         if self.uid_col not in df.columns:
             raise ValueError(f"TLD-family logics need a {self.uid_col!r} "
                              f"column (factory uid_col config)")

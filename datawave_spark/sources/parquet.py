@@ -20,20 +20,45 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def _first_parquet_file(root: str) -> str | None:
+    """The first ``*.parquet`` file under a directory, in sorted walk
+    order; hidden and underscore-prefixed entries are skipped, as Spark
+    skips them."""
+    import os
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for n in sorted(files):
+            if n.endswith(".parquet") and not n.startswith(("_", ".")):
+                return os.path.join(dirpath, n)
+    return None
+
+
 def _nanos_columns(path: str) -> list[str]:
-    """Column names with timestamp[ns] type in the parquet schema."""
-    schema = pq.read_schema(path)
+    """Column names stored as INT64 TIMESTAMP(NANOS) in the parquet
+    schema (of the first parquet file, when ``path`` is a directory
+    store).  Spark's INT96 timestamps also surface in pyarrow as
+    timestamp[ns], but Spark reads those as TimestampType already."""
+    import os
+    if os.path.isdir(path):
+        path = _first_parquet_file(path)
+        if path is None:
+            return []
+    pschema = pq.read_metadata(path).schema
+    int96 = {pschema.column(i).path for i in range(len(pschema))
+             if pschema.column(i).physical_type == "INT96"}
     out = []
-    for field in schema:
+    for field in pschema.to_arrow_schema():
         t = field.type
-        if pa.types.is_timestamp(t) and t.unit == "ns":
+        if (pa.types.is_timestamp(t) and t.unit == "ns"
+                and field.name not in int96):
             out.append(field.name)
     return out
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read parquet; nanosecond-timestamp columns come back as proper
-    TimestampType (microsecond, truncated)."""
+    """Read a parquet file or directory store (partitioned ones too);
+    nanosecond-timestamp columns come back as proper TimestampType
+    (microsecond, truncated)."""
     # nanosAsLong=true is set session-wide (session._DEFAULTS) so the
     # scan-time conf matches schema-inference time; set here too (both
     # are runtime SQL confs) so an externally-created SparkSession —

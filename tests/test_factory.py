@@ -124,3 +124,62 @@ class TestFactoryExtendedLogics:
         out = fac2.create("EdgeEventQuery",
                           QueryParameters(query="TYPE == 't'")).df
         assert out.count() == 1
+
+
+@pytest.fixture()
+def labeled_store(spark, tmp_path):
+    """A date-partitioned parquet store with a nanosecond timestamp and
+    a ``visibility`` label on every event."""
+    import datetime as dt
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    labels = ["PUB", "SEC", "PUB&SEC", None, "OPS"]
+    n = 20
+    root = tmp_path / "labeled"
+    pq.write_to_dataset(pa.table({
+        "event_id": list(range(n)),
+        "event_type": ["view" if i % 2 else "click" for i in range(n)],
+        "ts": pa.array([dt.datetime(2024, 1, 1 + i % 4, 12) for i in range(n)],
+                       pa.timestamp("ns")),
+        "visibility": [labels[i % 5] for i in range(n)],
+        "event_date": [f"2024-01-0{1 + i % 4}" for i in range(n)],
+    }), str(root), partition_cols=["event_date"])
+    return str(root), labels
+
+
+class TestFactoryAuths:
+    def test_auths_filter_events_by_visibility(self, spark, labeled_store):
+        from datawave_spark.sources.parquet import read_parquet
+        root, labels = labeled_store
+        fac = QueryLogicFactory({"events": read_parquet(spark, root)},
+                                date_col="event_date")
+
+        def ids(auths, **kw):
+            rq = fac.create("EventQuery", QueryParameters(
+                query="EVENT_TYPE == 'view'", auths=auths, **kw))
+            return sorted(r["event_id"] for r in rq.df.collect())
+
+        views = [i for i in range(20) if i % 2]
+        assert ids("") == views          # no auths: no visibility filter
+        assert ids("PUB") == [i for i in views if i % 5 in (0, 3)]
+        assert ids("PUB, SEC") == [i for i in views if i % 5 in (0, 1, 2, 3)]
+        assert ids("OPS", begin="2024-01-02", end="2024-01-02") == [
+            i for i in views if i % 5 in (3, 4) and i % 4 == 1]
+        n = fac.create("CountQuery", QueryParameters(
+            query="EVENT_TYPE == 'view'", auths="SEC")).df.first()[0]
+        assert n == len([i for i in views if i % 5 in (1, 3)])
+
+    def test_read_parquet_opens_partitioned_store(self, spark,
+                                                  labeled_store, tmp_path):
+        from pyspark.sql.types import TimestampType
+        from datawave_spark.sources.parquet import read_parquet
+        root, _ = labeled_store
+        df = read_parquet(spark, root)
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        assert df.filter("event_date = '2024-01-03'").count() == 5
+        # a Spark-written partitionBy store (with its _SUCCESS marker)
+        out = str(tmp_path / "spark_store")
+        df.write.partitionBy("event_date").parquet(out)
+        again = read_parquet(spark, out)
+        assert sorted(again.columns) == sorted(df.columns)
+        assert again.count() == 20
